@@ -268,11 +268,7 @@ def wins_e2e_rejects(spark, sf_dir):
     rrr, pod = _wins_inputs(spark, sf_dir)
     # pod derives from orders (fact-sized): never force-broadcast it — let
     # AQE pick the join strategy, same posture as the r4 entry
-    split = qa_reserves(
-        transform_reserves(rrr, pod, broadcast_lookup=False),
-        pod,
-        broadcast_lookup=False,
-    )
+    split = qa_reserves(transform_reserves(rrr, pod, broadcast_lookup=False))
     # The pipeline carries SHAPE as raw WKB-like bytes end-to-end (byte
     # passthrough is pinned by unit tests); the *graded* projection hexes it
     # because differential harnesses cannot hash raw binary columns
@@ -296,11 +292,7 @@ def wins_e2e_kept(spark, sf_dir):
     rrr, pod = _wins_inputs(spark, sf_dir)
     # pod derives from orders (fact-sized): never force-broadcast it — let
     # AQE pick the join strategy, same posture as the r4 entry
-    split = qa_reserves(
-        transform_reserves(rrr, pod, broadcast_lookup=False),
-        pod,
-        broadcast_lookup=False,
-    )
+    split = qa_reserves(transform_reserves(rrr, pod, broadcast_lookup=False))
     return _hex_shape(split.kept)
 
 

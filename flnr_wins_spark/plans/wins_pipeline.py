@@ -35,11 +35,17 @@ def transform_reserves(
     """RESERVES_AND_RESTRICTIONS calc block, ``src/wins_transform_staging.py:163-179``:
     prefix-cased FEATURE_CODE then DESCRIPTION <- POD.PNTS_DESCR.
 
+    The same enrichment join also carries the matched POD key as
+    ``__wins_key`` (NULL when TRRR_TAG is not in POD), which ``qa_reserves``
+    turns into its RI decision and drops — so the lookup is joined once.
+
     ``broadcast_lookup=True`` matches the reference posture (the POD
     snapshot is a dimension); pass False when the lookup is fact-sized —
     a forced broadcast bypasses the auto threshold and a big lookup
     would OOM the driver (parity.py's e2e fixtures derive pod from
     orders and do exactly that)."""
+    if "__wins_key" in rrr.columns:
+        raise ValueError("transform_reserves: input already carries __wins_key")
     rrr = conditional_update(
         rrr,
         "FEATURE_CODE",
@@ -50,7 +56,8 @@ def transform_reserves(
     )
     return enrich(
         rrr, pod, on=("TRRR_TAG", "PNTS_CODE"),
-        mapping={"DESCRIPTION": "PNTS_DESCR"}, broadcast_lookup=broadcast_lookup,
+        mapping={"DESCRIPTION": "PNTS_DESCR", "__wins_key": "PNTS_CODE"},
+        broadcast_lookup=broadcast_lookup,
     )
 
 
@@ -79,20 +86,21 @@ def transform_flooded(fal: DataFrame) -> DataFrame:
     return fal.withColumn("FEATURE_CODE", F.lit("GB11350000"))
 
 
-def qa_reserves(
-    rrr: DataFrame, pod: DataFrame, broadcast_lookup: bool = True
-) -> RejectSplit:
+def qa_reserves(rrr: DataFrame) -> RejectSplit:
     """QA stage, ``src/wins_transform_staging.py:236-273``: duplicate-tag
     rejection first, then referential-integrity rejection against POD; the
     not-found flag only lands where no flag exists yet (flag precedence,
-    ``:268-269``).
+    ``:268-269``). ``rrr`` is ``transform_reserves`` output.
 
-    Fused single pass: both checks are decided by ONE window count (the
-    duplicate tag) plus ONE left join against the distinct POD keys (the
-    RI membership), so kept and rejected are each a single filter of the
-    same tagged frame — the composed ``reject_duplicates >> reject_unmatched
-    >> union`` form evaluated the upstream scan+enrich+window once per
-    union branch (or needed a persist to avoid it). Provably identical:
+    Single pass: the duplicate check is ONE window count over TRRR_TAG, and
+    the RI check reads ``__wins_key``, the POD key that the enrichment join
+    in ``transform_reserves`` already matched — so the lookup is joined once
+    and kept and rejected are each a single filter of the same tagged frame
+    (the composed ``reject_duplicates >> reject_unmatched >> union`` form
+    evaluated the upstream scan+enrich+window once per union branch).
+    Provably identical:
+      * matched = ``__wins_key IS NOT NULL``, never ``DESCRIPTION IS NOT
+        NULL``: a POD row with a NULL PNTS_DESCR still matches;
       * kept  = not-dup AND matched  (= dup.kept semi-joined to POD keys);
       * rejected = dup rows flagged 'Duplicate ...' UNION not-dup-unmatched
         rows flagged 'not found ...' — the branches are disjoint, so the
@@ -102,31 +110,23 @@ def qa_reserves(
       * NULL tags: never duplicates (window guard), never match an
         equi-join — NULL-keyed rows land in rejected with the not-found
         flag, same as the anti-join.
-    The window and the join are both keyed on TRRR_TAG, so the join reuses
-    the window's partitioning (no second fact-side exchange)."""
-    if "__wins_freq" in rrr.columns or "__wins_matched" in rrr.columns:
+    The enrichment join runs before the window (a broadcast join when the
+    lookup is broadcast), so the window's exchange is the only fact-side
+    shuffle."""
+    if "__wins_key" not in rrr.columns:
+        raise ValueError("qa_reserves: input lacks __wins_key; pass transform_reserves output")
+    if "__wins_freq" in rrr.columns:
         raise ValueError("qa_reserves: input already carries a QA helper column")
     from pyspark.sql import Window
 
     dup_flag = "Duplicate TRRR_TAG"
     nf_flag = "TRRR_TAG not found in Water POD Table"
-    keys = (
-        pod.select(F.col("PNTS_CODE"))
-        .dropDuplicates(["PNTS_CODE"])
-        .withColumn("__wins_matched", F.lit(True))
-    )
-    if broadcast_lookup:
-        keys = F.broadcast(keys)
-    tagged = (
-        rrr.withColumn(
-            "__wins_freq", F.count(F.lit(1)).over(Window.partitionBy("TRRR_TAG"))
-        )
-        .join(keys, F.col("TRRR_TAG") == F.col("PNTS_CODE"), "left")
-        .drop("PNTS_CODE")
+    tagged = rrr.withColumn(
+        "__wins_freq", F.count(F.lit(1)).over(Window.partitionBy("TRRR_TAG"))
     )
     is_dup = (F.col("__wins_freq") > 1) & F.col("TRRR_TAG").isNotNull()
-    matched = F.col("__wins_matched").isNotNull()
-    helper = ("__wins_freq", "__wins_matched")
+    matched = F.col("__wins_key").isNotNull()
+    helper = ("__wins_freq", "__wins_key")
     kept = tagged.filter(~is_dup & matched).drop(*helper)
     flag_val = F.when(is_dup, F.lit(dup_flag)).otherwise(F.lit(nf_flag))
     if "REJECT_FLAG" in rrr.columns:
@@ -147,7 +147,7 @@ def run_staging(tables: dict[str, DataFrame], pod: DataFrame) -> StagingResult:
 
     if "reserves_and_restrictions" in tables:
         enriched = transform_reserves(tables["reserves_and_restrictions"], pod)
-        split = qa_reserves(enriched, pod)
+        split = qa_reserves(enriched)
         out["reserves_and_restrictions"] = split.kept
         rejects["reserves_and_restrictions"] = split.rejected
     if "non_trim_hydrography" in tables:

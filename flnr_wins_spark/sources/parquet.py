@@ -61,7 +61,9 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
 def publish(df: DataFrame, path: str, mode: str = "overwrite", coalesce: int | None = None) -> None:
     """Publish a result table (reference: copy upload gdb to staging area,
     ``src/wins_transform_staging.py:280-286``). Overwrite gives the
-    delete-and-recreate idempotence of ``:283-285`` atomically."""
+    delete-and-recreate idempotence of ``:283-285``, but not atomically: the
+    old table is deleted before the new one is written, so a write that fails
+    partway leaves ``path`` empty or partial (ROADMAP open item 4)."""
     if coalesce:
         df = df.coalesce(coalesce)
     df.write.mode(mode).parquet(path)

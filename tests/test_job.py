@@ -60,6 +60,119 @@ def test_run_job_failure_still_delivers_log(spark, tmp_path):
     assert "water_pod_table" in log  # the actual error is in the delivered log
 
 
+@pytest.fixture()
+def wins_job_config(spark, tmp_path):
+    """All five feature tables plus POD, so a run makes six publishes."""
+    geo = "OBJECTID long, FEATURE_CODE string, geometry binary"
+    frames = {
+        "reserves_and_restrictions": spark.createDataFrame(
+            [(1, "RV001", None, None, None), (2, "RV001", None, None, None),
+             (3, "RS002", None, None, None), (4, "RVGONE", None, None, None)],
+            "OBJECTID long, TRRR_TAG string, FEATURE_CODE string, DESCRIPTION string, geometry binary",
+        ),
+        "non_trim_hydrography": spark.createDataFrame(
+            [(1, "RS002", None, None, None), (2, "", None, None, None)],
+            "OBJECTID long, TNTH_TAG string, FEATURE_CODE string, STREAM_NAME string, geometry binary",
+        ),
+        "water_licensed_works_points": spark.createDataFrame(
+            [(1, "", "", None)], "OBJECTID long, TWRK_TAG string, FEATURE_CODE string, geometry binary"
+        ),
+        "water_licensed_works_lines": spark.createDataFrame(
+            [(1, "w", "fc", None), (2, "", "", None)],
+            "OBJECTID long, TWRK_TAG string, FEATURE_CODE string, geometry binary",
+        ),
+        "flooded_area_lines": spark.createDataFrame([(1, None, None)], geo),
+    }
+    paths = {}
+    for name, df in frames.items():
+        paths[name] = str(tmp_path / name)
+        df.write.parquet(paths[name])
+    pod_path = str(tmp_path / "pod")
+    spark.createDataFrame(
+        [("RV001", "d1", "g1"), ("RS002", None, "g2")],
+        "PNTS_CODE string, PNTS_DESCR string, SRCE_GAZETTED string",
+    ).write.parquet(pod_path)
+    return PipelineConfig(
+        tables=paths, lookup={"water_pod_table": pod_path}, staging_dir=str(tmp_path / "staging")
+    )
+
+
+# rows each output holds after a run over ``wins_job_config``
+_OUTPUT_ROWS = {
+    "reserves_and_restrictions": 1,
+    "reserves_and_restrictions__rejects": 3,
+    "non_trim_hydrography": 2,
+    "water_licensed_works_points": 1,
+    "water_licensed_works_lines": 2,
+    "flooded_area_lines": 1,
+}
+
+
+def test_run_job_publish_failure_is_reported_and_others_finish(spark, wins_job_config, monkeypatch):
+    """Fault injection: one publish raises while the other five run. The run
+    fails, its log names the table, every other output is published, and no
+    Spark job is left running when run_job returns."""
+    import os
+
+    from flnr_wins_spark.plans import job
+
+    real = job.publish
+
+    def flaky(df, dest):
+        if os.path.basename(dest) == "non_trim_hydrography":
+            raise OSError("disk full")
+        real(df, dest)
+
+    monkeypatch.setattr(job, "publish", flaky)
+    sent = []
+    ok, log = run_job(spark, wins_job_config, notify=sent.append)
+    assert not ok
+    assert sent and sent[0].startswith("FAILURE")
+    assert "not published non_trim_hydrography" in sent[0] and "disk full" in sent[0]
+    staging = wins_job_config.staging_dir
+    for name, rows in _OUTPUT_ROWS.items():
+        if name != "non_trim_hydrography":
+            assert spark.read.parquet(os.path.join(staging, name)).count() == rows, name
+    assert not os.path.exists(os.path.join(staging, "non_trim_hydrography"))
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+
+def test_run_job_threads_keep_own_properties_and_callers_job_group(spark, wins_job_config, monkeypatch):
+    """Each publish thread gets its own copy of the caller's local
+    properties: a property one thread sets is not seen by another, even
+    when all six publishes are in flight at once. The job group the caller
+    set still covers every job of the run, so cancelJobGroup stops it all."""
+    import threading
+
+    from flnr_wins_spark.plans import job
+
+    sc = spark.sparkContext
+    real = job.publish
+    barrier = threading.Barrier(len(_OUTPUT_ROWS), timeout=120)
+    seen = {}
+
+    def probe(df, dest):
+        sc.setLocalProperty("flnr.test.dest", dest)
+        barrier.wait()
+        seen[dest] = sc.getLocalProperty("flnr.test.dest")
+        real(df, dest)
+
+    monkeypatch.setattr(job, "publish", probe)
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("flnr-test-run", "one WINS run")
+    try:
+        ok, log = run_job(spark, wins_job_config)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert ok, log
+    assert len(seen) == len(_OUTPUT_ROWS)
+    assert all(got == dest for dest, got in seen.items()), seen
+    assert len(tracker.getJobIdsForGroup("flnr-test-run")) >= len(_OUTPUT_ROWS)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped  # no job escaped the group
+
+
 def test_config_yaml_env_resolution(tmp_path, monkeypatch):
     monkeypatch.setenv("WINS_STAGING", "/data/staging")
     cfg_file = tmp_path / "app.yml"

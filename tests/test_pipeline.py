@@ -71,7 +71,7 @@ def test_reserves_transform_codes_and_enrichment(spark, wins_tables):
 
 def test_reserves_qa_reject_semantics(spark, wins_tables):
     tables, pod = wins_tables
-    split = qa_reserves(transform_reserves(tables["reserves_and_restrictions"], pod), pod)
+    split = qa_reserves(transform_reserves(tables["reserves_and_restrictions"], pod))
     kept_ids = sorted(r.OBJECTID for r in split.kept.collect())
     rej = {r.OBJECTID: r.REJECT_FLAG for r in split.rejected.collect()}
     # all 5 dup rows rejected (no survivor), not-found row rejected
@@ -122,7 +122,7 @@ def test_geometry_bytes_pass_through_untouched(spark, wins_tables):
         r.OBJECTID: bytes(r.geometry) for r in rrr.collect()
     }
     assert all(len(v) == 16 for v in want.values())
-    split = qa_reserves(transform_reserves(rrr, pod), pod)
+    split = qa_reserves(transform_reserves(rrr, pod))
     got = {}
     for r in split.kept.collect():
         got[r.OBJECTID] = bytes(r.geometry)
@@ -144,3 +144,47 @@ def test_publish_roundtrip(spark, wins_tables, tmp_path):
     assert back.count() == 3
     publish(result.tables["reserves_and_restrictions"], dest)  # idempotent overwrite
     assert spark.read.parquet(dest).count() == 3
+
+
+def _joins(df) -> int:
+    """Join nodes in ``df``'s optimized logical plan (no execution)."""
+    tree = df._jdf.queryExecution().optimizedPlan().treeString()
+    return sum(1 for line in tree.splitlines() if line.lstrip(" :+-|").startswith("Join "))
+
+
+def test_reserves_qa_joins_the_lookup_once(spark, wins_tables):
+    """The RI decision reuses the enrichment join's matched key, so each
+    reserves output plans exactly one join against POD."""
+    tables, pod = wins_tables
+    split = qa_reserves(transform_reserves(tables["reserves_and_restrictions"], pod))
+    assert _joins(split.kept) == 1
+    assert _joins(split.rejected) == 1
+
+
+def test_fact_side_pnts_code_survives_qa(spark, wins_tables):
+    """A fact-side column named like the lookup key is carried, not dropped
+    or replaced by the lookup's key."""
+    tables, pod = wins_tables
+    rrr = tables["reserves_and_restrictions"].withColumn(
+        "PNTS_CODE", F.concat(F.lit("fact-"), F.col("OBJECTID").cast("string"))
+    )
+    split = qa_reserves(transform_reserves(rrr, pod))
+    for df in (split.kept, split.rejected):
+        assert "PNTS_CODE" in df.columns
+        assert all(r.PNTS_CODE == f"fact-{r.OBJECTID}" for r in df.collect())
+    assert sorted(r.OBJECTID for r in split.kept.collect()) == [1, 2, 3]
+
+
+def test_reserves_helper_column_guard(spark, wins_tables):
+    tables, pod = wins_tables
+    rrr = tables["reserves_and_restrictions"]
+    with pytest.raises(ValueError, match="__wins_key"):
+        transform_reserves(rrr.withColumn("__wins_key", F.lit("x")), pod)
+    with pytest.raises(ValueError, match="__wins_key"):
+        qa_reserves(rrr)  # not transform_reserves output: no matched key
+    enriched = transform_reserves(rrr, pod)
+    with pytest.raises(ValueError, match="helper column"):
+        qa_reserves(enriched.withColumn("__wins_freq", F.lit(1)))
+    split = qa_reserves(enriched)
+    for df in (split.kept, split.rejected):
+        assert not [c for c in df.columns if c.startswith("__wins_")]
